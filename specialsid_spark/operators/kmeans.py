@@ -16,6 +16,8 @@ each iteration.  So every assignment decision is an integer comparison
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -92,8 +94,6 @@ def assign_clusters_np(mu_df: DataFrame, centroids: list[list[int]]) -> DataFram
     literals cost ~0.2 s of Catalyst analysis per plan; the closure
     carries the centroids so the plan stays literal-free and constant-
     size.  Bit-identical cids (exact integer arithmetic both ways)."""
-    import numpy as np  # noqa: PLC0415
-
     from pyspark.sql.types import IntegerType, StructType  # noqa: PLC0415
 
     cents = np.array(centroids, dtype=np.int64)
@@ -121,19 +121,15 @@ def assign_clusters_udf(mu_df: DataFrame, centroids: list[list[int]]) -> DataFra
     HOF CASE on a narrow scan (measured +38% on sim_ivf_trained_topk at
     sf1, where the natural layout is one row group).  Bit-identical
     cids (tests/test_kmeans.py pins all three twins)."""
-    import numpy as np  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     cents = np.array(centroids, dtype=np.int64)
 
-    def _cid_of(mu):
+    @F.pandas_udf("int")
+    def cid_of(mu: pd.Series) -> pd.Series:
         if len(mu) == 0:
             return pd.Series([], dtype="int32")
         x = np.stack(mu.to_numpy()).astype(np.int64, copy=False)
         return pd.Series(_np_cids(x, cents).astype("int32"))
-
-    cid_of = F.pandas_udf(_cid_of, "int", F.PandasUDFType.SCALAR)
 
     return mu_df.withColumn("cid", cid_of("mu"))
 
@@ -159,9 +155,6 @@ def kmeans_fit(
     plan literals to re-analyze, no interpreted HOF per row, no
     dim-fold row explosion).  The driver still collects only k×dim
     partials per iteration — a few KB at any corpus size."""
-    import numpy as np  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     if "mu" in df.columns:
         mu_df = df
@@ -234,9 +227,6 @@ def kmeans_stats(
     rows per Arrow batch; the driver folds partials as Python ints
     (arbitrary precision — a superset of the old F.sum(long) domain).
     Returns ({cid: n_vectors}, total_inertia)."""
-    import numpy as np  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     cents = np.array(centroids, dtype=np.int64)
 

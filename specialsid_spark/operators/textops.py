@@ -1,9 +1,11 @@
 """Text-analysis + dedup expression builders (SURVEY.md §2.11 X1/X4).
 
-Everything here is a *native Column expression* builder — tokenize,
-shingle, MinHash, SimHash, fingerprint — so the hot path stays inside
-whole-stage codegen.  Python never touches a row: a 100 TB dedup pass
-is a scan + explode + groupBy, all JVM-side.
+Almost everything here is a *native Column expression* builder —
+tokenize, shingle, MinHash, fingerprint — so the hot path stays inside
+whole-stage codegen.  The exceptions are Arrow batch kernels where the
+SQL form cannot stay compiled: :func:`simhash_votes` (the 128/256-vote
+SimHash aggregate is wider than ``spark.sql.codegen.maxFields``) and
+:func:`dot_np`.
 
 Cross-engine portability (for the DuckDB oracle): hashes are md5 hex
 strings (identical in both engines) and MinHash takes the *lexicographic
@@ -13,7 +15,9 @@ hash function.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 def tokens(text: Column | str) -> Column:
@@ -111,18 +115,6 @@ SQL_TOKEN_DIGEST16 = "list_transform({toks}, t -> ('0x' || substring(md5(t), 1, 
 SQL_TOKEN_MD5S = "list_transform({toks}, t -> md5(t))"
 
 
-def sql_digest16_block(md5s_expr: str, block: int) -> str:
-    """DuckDB 16-bit digest list from hex digits [4b+1 .. 4b+4] of a
-    per-token md5 list — four independent blocks per md5, so a 64-bit
-    SimHash costs one hash per token.  (The Spark side reaches the same
-    digests via explode + substring/conv inside `_simhash_block_sigs`: the
-    explode+SUM shape stays in whole-stage codegen, where an array-fold
-    formulation would fall back to interpreted HOFs.)"""
-    return (
-        f"list_transform({md5s_expr}, m -> ('0x' || substring(m, {4 * block + 1}, 4))::INT)"
-    )
-
-
 def _digest_bit_shift(b: int) -> int:
     # bit b historically lived in hex digit b//4 at position b%4; digit i
     # occupies bits 4*(3-i)..4*(3-i)+3 of the 16-bit digest value
@@ -165,6 +157,70 @@ def sql_simhash16_digests(digs_expr: str) -> str:
             f"THEN {1 << b} ELSE 0 END"
         )
     return "(" + " + ".join(votes) + ")"
+
+
+def simhash_votes(
+    docs: DataFrame, digest: str, w: int, names: Sequence[str]
+) -> DataFrame:
+    """(doc_id, *names): SimHash signatures as ``len(names)`` w-bit
+    blocks — the vote kernel behind every block signature (md5 with
+    w=16 or w=32 for 64/128-bit signatures, sha256 with 8 limbs of w=32
+    for 256 bits).
+
+    ``docs`` is any (doc_id, toks) frame, tokens one array per row.
+    Each row's tokens are de-duplicated, and rows sharing a doc_id vote
+    TOGETHER (a streaming drop can repeat an id; its tokens form one
+    multiset).  Block b, bit k is 1 iff the tokens whose digest bit
+    ``w*b + (w-1-k)`` (big-endian) is set are at least half the doc's
+    tokens — the bits of the b-th w-bit hex slice, so a block equals
+    the ``conv(substring(digest, …), 16, 10)`` vote of the DuckDB
+    oracles.  Docs without tokens (NULL text) emit no row.
+
+    Shape: one doc_id exchange behind a map-side partial
+    ``collect_list``, then one ``mapInPandas`` that hashes each token
+    once and votes with ``np.unpackbits`` + ``np.add.reduceat``.  A SQL
+    formulation needs one SUM per signature bit, and 128 or 256
+    aggregate fields exceed ``spark.sql.codegen.maxFields`` (100): that
+    plan runs without whole-stage codegen."""
+    import hashlib  # noqa: PLC0415
+
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+    from pyspark.sql.types import LongType, StructField, StructType  # noqa: PLC0415
+
+    nbits = w * len(names)
+    hash_fn = getattr(hashlib, digest)
+    dsize = hash_fn().digest_size
+    weights = np.left_shift(np.int64(1), np.arange(w - 1, -1, -1, dtype=np.int64))
+    grouped = docs.groupBy("doc_id").agg(
+        F.flatten(F.collect_list(F.array_distinct("toks"))).alias("toks")
+    )
+    schema = StructType(
+        [grouped.schema["doc_id"]]
+        + [StructField(n, LongType(), False) for n in names]
+    )
+
+    def vote(pdf):
+        n = pdf["toks"].map(len).to_numpy(np.int64)
+        keep = n > 0
+        toks, n = pdf["toks"].to_numpy()[keep], n[keep]
+        digs = b"".join(hash_fn(t.encode()).digest() for ts in toks for t in ts)
+        bits = np.unpackbits(
+            np.frombuffer(digs, np.uint8).reshape(-1, dsize)[:, : nbits // 8], axis=1
+        )
+        ones = np.add.reduceat(bits, np.cumsum(n) - n, axis=0, dtype=np.int64)
+        blocks = (2 * ones >= n[:, None]).reshape(len(n), len(names), w) @ weights
+        out = pd.DataFrame(blocks, columns=list(names))
+        out.insert(0, "doc_id", pdf["doc_id"].to_numpy()[keep])
+        return out
+
+    def run(batches):
+        for pdf in batches:
+            # bounded slices: the unpacked bit matrix is tokens x nbits bytes
+            for lo in range(0, len(pdf), 1024):
+                yield vote(pdf.iloc[lo : lo + 1024])
+
+    return grouped.mapInPandas(run, schema)
 
 
 def fingerprint(toks: Column) -> Column:

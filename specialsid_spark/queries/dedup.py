@@ -25,7 +25,7 @@ from specialsid_spark.operators.textops import (
     minhash_bases,
     minhash_component,
     simhash16_from_digests,
-    sql_digest16_block,
+    simhash_votes,
     sql_minhash_component,
     sql_simhash16_digests,
     token_digest16,
@@ -181,16 +181,15 @@ def _minhash_sigs_df(d: DataFrame) -> DataFrame:
     """MinHash signatures from any (doc_id, text) frame — shared by the
     registered batch queries AND the streaming near-dup ingest gate.
 
-    Shape (the _simhash_block_sigs discipline): every CW component is
-    materialized as a plain column BEFORE the aggregate, so the 16 MINs
-    reference attributes only and the groupBy partial-aggregates
-    map-side — the shuffle carries one 17-long partial per (doc,
-    partition), never the shingle occurrence stream.  (The previous
+    Shape: every CW component is materialized as a plain column
+    BEFORE the aggregate, so the 16 MINs reference attributes only and
+    the groupBy partial-aggregates map-side — the shuffle carries one
+    17-long partial per (doc, partition), never the shingle occurrence
+    stream.  (The previous
     repartition("doc_id") barrier kept CollapseProject from inlining
     u1/u2 into the agg expressions but paid a full occurrence-stream
     exchange for it; the named u1/u2 projection survives on its own —
-    multi-referenced non-cheap expressions don't collapse — exactly
-    like the md5/digest projections in the SimHash kernel.)"""
+    multi-referenced non-cheap expressions don't collapse.)"""
     ex = _exploded_shingles_df(d)
     # md5 through a named projection -> hashed exactly once per shingle
     hashed = ex.select("doc_id", F.md5("shingle").alias("h"))
@@ -591,66 +590,27 @@ def _sql_simhash_block_sigs(w: int, prefix: str = "", source: str = "documents")
 def _simhash_block_sigs(
     spark: SparkSession, sf_dir: str, w: int, docs: DataFrame | None = None
 ) -> DataFrame:
-    """(doc_id, blk0..blk3): THE SimHash kernel, parameterized by block
-    width ``w`` — signature width is 4*w bits (w=16 -> 64-bit, w=32 ->
-    128-bit; the radius-3 pigeonhole join downstream is width-agnostic).
-
-    Shape: explode distinct tokens -> ONE md5 + four w-bit digest ints
-    per token -> groupBy(doc_id) with 4*w codegen'd conditional SUMs
-    (bit k votes +1/-1) -> four block columns from the vote signs.
-
-    Why explode+agg instead of array folds: Spark's higher-order
-    functions are CodegenFallback (interpreted per element), measured
-    ~4x slower here; plain SUM aggregates stay in whole-stage codegen
-    AND partial-aggregate map-side, so the shuffle carries one 4*w-int
-    partial per (doc, partition), not tokens.
+    """(doc_id, blk0..blk3): THE SimHash signature, parameterized by
+    block width ``w`` — signature width is 4*w bits (w=16 -> 64-bit,
+    w=32 -> 128-bit; the radius-3 pigeonhole join downstream is
+    width-agnostic).  Block b is voted from the b-th w-bit slice of
+    each distinct token's md5 — one hash per token at any width — by
+    the Arrow vote kernel `textops.simhash_votes`.
 
     Width rule (measured, BASELINE.md §3): the block key space 2^w must
     dwarf the corpus or pigeonhole blocking saturates into random
     collisions — 4x16-bit blocks produced 195M collision rows at 80k
     docs (205s at 16x) vs 33s for 4x32.  Block width >= ~2*log2(corpus):
-    w=32 carries ~1e6-1e8 docs; at 1e10 docs (100 TB) use a 256-bit
-    signature as 4x64-bit blocks — same plan, wider slices.
+    w=32 carries ~1e6-1e8 docs; at 1e10 docs (100 TB) use the 256-bit
+    signature of `_simhash256_block_sigs`.
 
-    ``docs`` overrides the source relation (any (doc_id, text) frame);
-    default is the full documents table.
-
-    Implementation note: the 4*w vote sums are built as FOUR SQL
-    expression strings (one per block, parsed JVM-side by F.expr), not
-    4*w Python Column objects — the Column route costs ~1,500 py4j
-    round-trips and measured ~2s of DRIVER time per call at w=32,
-    dwarfing the 0.7s of actual executor work.  Wrapping each block's
-    32 conditional SUMs in one string keeps plan construction ~10 py4j
-    calls; Catalyst extracts the identical 4*w aggregate functions
-    either way, so the executed plan (map-side partial SUMs -> one
-    shuffle of 4*w-int partials keyed on doc_id) is unchanged."""
-    hexw = w // 4
+    ``docs`` overrides the source relation (any (doc_id, text) frame,
+    or one already carrying a shared tokenized ``toks`` projection);
+    default is the full documents table."""
     d = docs if docs is not None else load_parallel(spark, sf_dir, "documents")
-    # a frame already carrying `toks` (shared tokenized projection)
-    # skips the re-tokenize; array_distinct is per-doc either way
-    tok_col = (
-        F.col("toks") if "toks" in d.columns else tokens("text")
-    )
-    ex = d.select(
-        "doc_id", F.explode(F.array_distinct(tok_col)).alias("tok")
-    ).selectExpr("doc_id", "md5(tok) AS m")
-    g = ex.selectExpr(
-        "doc_id",
-        *[
-            f"CAST(conv(substring(m, {hexw * b + 1}, {hexw}), 16, 10) AS BIGINT) AS d{b}"
-            for b in range(4)
-        ],
-    )
-    blk_exprs = [
-        " + ".join(
-            f"CASE WHEN sum(CAST(shiftright(d{b}, {k}) & 1 AS INT) * 2 - 1) >= 0"
-            f" THEN CAST({1 << k} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-            for k in range(w)
-        )
-        for b in range(4)
-    ]
-    return g.groupBy("doc_id").agg(
-        *[F.expr(e).alias(f"blk{b}") for b, e in enumerate(blk_exprs)]
+    tok_col = F.col("toks") if "toks" in d.columns else tokens("text")
+    return simhash_votes(
+        d.select("doc_id", tok_col.alias("toks")), "md5", w, [f"blk{b}" for b in range(4)]
     )
 
 
@@ -974,8 +934,9 @@ def dedup_simhash_radius3_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs ~ 3k pairs, and the join cost is driven by TRUE near-dups
     again.  Rule: block width >= ~2*log2(corpus); at 100 TB (1e10 docs)
     that argues 256-bit signatures with 4x64 blocks for radius 3 — same
-    plan, wider conv().  Signature cost is one md5 per token regardless
-    (blocks are slices of the same digest)."""
+    vote kernel, sha256 limbs (dedup_simhash256_radius3_pairs).
+    Signature cost is one hash per token regardless (blocks are slices
+    of the same digest)."""
     return _radius3_pairs(_simhash_block_sigs(spark, sf_dir, 32))
 
 
@@ -1014,47 +975,26 @@ def _sql_simhash256_sigs() -> str:
 def _simhash256_block_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, blk0h, blk0l, …, blk3h, blk3l): the width-rule scale
     instantiation — 256-bit signatures as 4×64-bit pigeonhole blocks,
-    each block carried as TWO unsigned 32-bit limbs.
+    each block carried as TWO unsigned 32-bit limbs, voted from each
+    distinct token's sha256 (md5 only has 128 bits) by the same Arrow
+    kernel as `_simhash_block_sigs`.
 
-    Why limbs instead of w=64 in `_simhash_block_sigs`: a 64-bit block
-    value occupies the full BIGINT range — Spark's
-    CAST(conv(hex,16,10) AS BIGINT) nulls above 2^63-1 and DuckDB's
-    ('0x'…)::BIGINT overflows — so the one-column-per-block layout is
-    not representable cross-engine at w=64.  Two 32-bit limbs keep
-    every value in [0, 2^32), cost one extra join-key column, and the
-    pigeonhole/verify logic is unchanged (equal block ⇔ both limbs
-    equal; popcount distributes over limbs).
+    Why limbs instead of w=64 blocks: a 64-bit block value occupies the
+    full BIGINT range — Spark's CAST(conv(hex,16,10) AS BIGINT) nulls
+    above 2^63-1 and DuckDB's ('0x'…)::BIGINT overflows — so the
+    one-column-per-block layout is not representable cross-engine at
+    w=64.  Two 32-bit limbs keep every value in [0, 2^32), cost one
+    extra join-key column, and the pigeonhole/verify logic is unchanged
+    (equal block ⇔ both limbs equal; popcount distributes over limbs).
 
     This is the 100 TB configuration by the kernel's own measured width
-    rule (block ≥ ~2·log2 corpus ⇒ 4×64 at 1e10 docs).  Same plan as
-    w=16/32: explode distinct tokens → one sha256 per token (256 digest
-    bits; md5 only has 128) → 256 codegen'd conditional SUM votes built
-    as 8 SQL expression strings (the py4j-cost lesson from r3) → limb
-    values from vote signs."""
+    rule (block ≥ ~2·log2 corpus ⇒ 4×64 at 1e10 docs)."""
     d = load_parallel(spark, sf_dir, "documents")
-    ex = d.select(
-        "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("tok")
-    ).selectExpr("doc_id", "sha2(tok, 256) AS m")
-    g = ex.selectExpr(
-        "doc_id",
-        *[
-            f"CAST(conv(substring(m, {16 * b + 1 + 8 * half}, 8), 16, 10) AS BIGINT)"
-            f" AS d{b}{'h' if half == 0 else 'l'}"
-            for b in range(4)
-            for half in range(2)
-        ],
-    )
-    limb_exprs = {
-        f"blk{b}{hl}": " + ".join(
-            f"CASE WHEN sum(CAST(shiftright(d{b}{hl}, {k}) & 1 AS INT) * 2 - 1) >= 0"
-            f" THEN CAST({1 << k} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-            for k in range(32)
-        )
-        for b in range(4)
-        for hl in ("h", "l")
-    }
-    return g.groupBy("doc_id").agg(
-        *[F.expr(e).alias(name) for name, e in limb_exprs.items()]
+    return simhash_votes(
+        d.select("doc_id", tokens("text").alias("toks")),
+        "sha256",
+        32,
+        [f"blk{b}{hl}" for b in range(4) for hl in ("h", "l")],
     )
 
 

@@ -843,11 +843,15 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch (vec_id % 4 = 0) is then assigned against the FROZEN
     centroids — no retraining, no touching base vectors — and appended
     as a second snapshot version.  The new vectors immediately query
-    the combined postings; each answer row carries neighbor_is_new so
-    the oracle value-checks that search really spans both generations.
+    the combined base ∪ batch assignment; each answer row carries
+    neighbor_is_new so the oracle value-checks that search really spans
+    both generations.  The committed postings table is write-only in
+    this query — the search reuses the in-session assigned frame, never
+    a snapshot read — so the commit/time-travel round-trip is covered
+    by tests/test_snapshot.py, not by this query's oracle.
 
-    Scale shape: the add is one map-side assignment pass (centroids are
-    plan literals) + an append-only commit of (vec_id, cid) pairs; the
+    Scale shape: the add is one map-side assignment pass (centroids
+    ride in the pandas_udf closure) + an append-only commit of (vec_id, cid) pairs; the
     search is the usual nprobe cell-keyed candidate join.  At 100 TB a
     daily embedding drop indexes in one pass over the drop — never the
     corpus — and any index version is time-travelable."""
@@ -891,9 +895,9 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job commits both versions (r14 opt, snapshot_commit_generations —
     # base and batch rows sit in the same assigned frame, so a second
     # write job re-ran the write machinery for rows already in hand);
-    # the assignment itself is the codegen'd SQL kernel (r14 cold A/B —
-    # shipping every mu through Arrow and back measured 2.5× the
-    # in-place k×d-literal evaluation).
+    # the assignment itself is the cid-only pandas_udf (r14 cold A/B —
+    # only mu crosses Arrow, inward, and one int column comes back;
+    # shipping every mu out and back via mapInPandas measured 2.5×).
     assigned = assign_clusters_udf(mu_df, centroids).localCheckpoint(eager=False)
     snapshot_commit_generations(
         assigned.select(

@@ -153,18 +153,29 @@ def test_multiprobe_lsh_broadcasts_query_side(spark, qs):
     assert "CartesianProduct" not in p
 
 
+def _assert_simhash_vote_shape(sp: str, what: str) -> None:
+    # the signature builder is ONE doc_id exchange behind a map-side
+    # partial token collect, then the Arrow vote kernel — no per-bit
+    # SQL SUMs (128/256 of them exceed codegen's maxFields)
+    assert sp.count("- Exchange") == 1, f"{what}: one exchange expected"
+    assert "hashpartitioning(doc_id" in sp, f"{what}: exchange must key on doc_id"
+    assert "partial_collect_list" in sp, f"{what}: tokens must combine map-side"
+    assert sp.count("- MapInPandas") == 1, f"{what}: votes belong in the Arrow kernel"
+    assert "partial_sum" not in sp, f"{what}: per-bit SQL vote aggregate is back"
+
+
 def test_simhash_pairs_no_cartesian_and_partial_agg(spark, qs):
     # production (128-bit) radius-3 pairs: width-parameterized kernel at w=32
     p = plan_of(spark, qs["dedup_simhash_radius3_pairs"](spark, SF_DIR))
     assert "CartesianProduct" not in p
+    assert "BroadcastNestedLoopJoin" not in p
     # the pair query plans over a localCheckpoint of the signatures, so
-    # assert the vote aggregation's map-side combine on the sig builder
-    # at BOTH registered widths
+    # assert the vote kernel's shape on the sig builder at BOTH
+    # registered widths
     from specialsid_spark.queries.dedup import _simhash_block_sigs
 
     for w in (16, 32):
-        sp = plan_of(spark, _simhash_block_sigs(spark, SF_DIR, w))
-        assert "partial_sum" in sp, f"w={w} bit-votes must combine map-side"
+        _assert_simhash_vote_shape(plan_of(spark, _simhash_block_sigs(spark, SF_DIR, w)), f"w={w}")
 
 
 def test_embedding_top20_is_blocked_equijoin(spark, qs):
@@ -190,9 +201,8 @@ def test_text_pipelines_scan_documents_once(spark, qs):
 def test_minhash_groupby_partial_aggregates_map_side(spark, qs):
     # r13 opt: the signature groupBy must partial-aggregate map-side —
     # the shuffle carries one 17-long partial per (doc, partition),
-    # never the shingle occurrence stream (the _simhash_block_sigs
-    # discipline; the old repartition('doc_id') barrier paid a full
-    # occurrence-stream exchange)
+    # never the shingle occurrence stream (the old repartition('doc_id')
+    # barrier paid a full occurrence-stream exchange)
     p = plan_of(spark, qs["dedup_minhash_signatures"](spark, SF_DIR))
     assert "partial_min" in p, "map-side partial MIN missing"
     # exactly one hash exchange (the aggregate's); no repartition barrier
@@ -330,15 +340,14 @@ def test_simhash256_pairs_no_cartesian_and_partial_agg(spark, qs):
     # r4: the 100 TB-width instantiation keeps the w=32 kernel's plan
     # shape — pigeonhole equi-join on (band, limb, limb), never a
     # cartesian; the pairs query plans over a localCheckpoint of the
-    # signatures (like the w=32 test above), so the 256 vote SUMs'
-    # map-side combine is asserted on the signature builder directly
+    # signatures (like the w=32 test above), so the vote kernel's shape
+    # is asserted on the signature builder directly
     p = plan_of(spark, qs["dedup_simhash256_radius3_pairs"](spark, SF_DIR))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     from specialsid_spark.queries.dedup import _simhash256_block_sigs
 
-    sp = plan_of(spark, _simhash256_block_sigs(spark, SF_DIR))
-    assert "partial_sum" in sp, "limb votes must combine map-side"
+    _assert_simhash_vote_shape(plan_of(spark, _simhash256_block_sigs(spark, SF_DIR)), "256")
 
 
 def test_codec_queries_are_single_pass_map_pipelines(spark, qs):
