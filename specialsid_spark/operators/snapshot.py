@@ -10,9 +10,10 @@ a read-your-own-corruption hazard (readers list files mid-swap), and
 manifest commits:
 
 * **Atomicity** — data files land under ``data/`` first; the commit
-  point is a single atomic rename of ``_manifests/vN.json.tmp`` →
-  ``vN.json``.  A crash before the rename leaves orphans (invisible,
-  vacuumable), never a half-visible table.
+  point is one put-if-absent publish (:func:`_publish`): the manifest
+  is written to a uniquely named temp file and hard-linked to
+  ``_manifests/vN.json``.  A crash before the link leaves orphans
+  (invisible, vacuumable), never a half-visible table.
 * **Snapshot isolation** — a reader that resolved version N keeps a
   consistent file list no matter how many commits land afterwards.
 * **Time travel** — ``snapshot_read(path, version=K)`` reproduces any
@@ -21,11 +22,16 @@ manifest commits:
 * **Vacuum** — files referenced by NO retained manifest are deleted;
   everything else is untouchable garbage collection.
 
-Single-writer by design (commits are serialized by the caller); a
-multi-writer deployment would CAS the manifest pointer in a metastore
-— the local atomic rename is the stand-in for that primitive, and the
-rest of the protocol is unchanged.  Manifests store RELATIVE file
-paths so a table directory can be relocated wholesale.
+Concurrent writers are detected, not serialized: each commit builds
+version N on top of version N-1, and the link fails if N already
+exists, so the losing writer raises :class:`CommitConflict` instead of
+silently replacing the winner's manifest (its data files stay as
+vacuumable orphans).  There is no rebase-and-retry — the streaming
+gates are single-writer per table.  A multi-writer deployment would
+CAS the manifest pointer in a metastore; the local link is the
+stand-in for that primitive.  This module is the only one that knows
+the manifest format.  Manifests store RELATIVE file paths so a table
+directory can be relocated wholesale.
 """
 
 from __future__ import annotations
@@ -36,6 +42,10 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+class CommitConflict(FileExistsError):
+    """Another writer published the version this commit was built for."""
 
 
 def _manifest_dir(path: str) -> Path:
@@ -113,6 +123,145 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _latest(path: str) -> int:
+    """The latest committed version, 0 for a table that never committed."""
+    versions = snapshot_versions(path)
+    return versions[-1] if versions else 0
+
+
+def _head(path: str) -> tuple[int, dict]:
+    """(latest version, its manifest) for the verbs that rewrite a table."""
+    v = _latest(path)
+    if not v:
+        raise ValueError(f"no snapshot versions at {path!r}")
+    return v, _read_manifest(path, v)
+
+
+def _resolve(path: str, version: int | None) -> tuple[int, dict]:
+    """(version, manifest) for the read verbs: ``version`` or the latest."""
+    versions = snapshot_versions(path)
+    if not versions:
+        raise FileNotFoundError(f"no committed snapshot at {path}")
+    v = versions[-1] if version is None else version
+    if v not in versions:
+        raise ValueError(f"version {v} not in {versions}")
+    return v, _read_manifest(path, v)
+
+
+def _publish(path: str, manifest: dict) -> int:
+    """THE commit point, shared by every writer: publish ``manifest`` as
+    ``_manifests/v{version}.json`` iff that version does not exist yet,
+    and return the version.  The JSON goes to a uniquely named temp file
+    first, then ``os.link`` — atomic, and unlike rename it never
+    replaces an existing file — makes it visible; a lost race raises
+    :class:`CommitConflict`.  Stats for files the manifest does not list
+    and an empty ``deletes`` list are dropped here, once."""
+    body = {k: v for k, v in manifest.items() if k not in ("stats", "deletes")}
+    listed = set(body["files"])
+    stats = {f: s for f, s in manifest.get("stats", {}).items() if f in listed}
+    if stats:
+        body["stats"] = stats
+    if manifest.get("deletes"):
+        body["deletes"] = list(manifest["deletes"])
+    v = body["version"]
+    mdir = _manifest_dir(path)
+    mdir.mkdir(parents=True, exist_ok=True)
+    tmp = mdir / f".tmp-{uuid.uuid4().hex}"
+    try:
+        tmp.write_text(json.dumps(body, indent=1))
+        try:
+            os.link(tmp, mdir / f"v{v}.json")
+        except FileExistsError:
+            raise CommitConflict(
+                f"version {v} of {path} was committed by another writer"
+            ) from None
+    finally:
+        tmp.unlink(missing_ok=True)
+    return v
+
+
+def _next_manifest(path: str, version: int, mode: str, new_files: list[str]) -> dict:
+    """The manifest that commits ``new_files`` as ``version`` on top of
+    version - 1.  ``'append'`` keeps the parent's files and carries its
+    column statistics and deletion vectors forward; ``'overwrite'``
+    references only the new files."""
+    manifest = {
+        "version": version,
+        "parent": version - 1 or None,
+        "op": mode,
+        "files": new_files,
+    }
+    if mode == "append" and version > 1:
+        parent = _read_manifest(path, version - 1)
+        manifest["files"] = parent["files"] + new_files
+        # column statistics recorded by snapshot_commit_stats stay valid
+        # for inherited (immutable) files — carry them forward so a
+        # stats-less append never blinds the scan pruner retroactively
+        manifest["stats"] = parent.get("stats", {})
+        # deletion vectors mask rows of inherited files; dropping them on
+        # a routine append would RESURRECT deleted rows (ADVICE r10) —
+        # carry them forward.  Overwrite references none of the parent's
+        # files, so its vectors have nothing left to mask and are dropped.
+        manifest["deletes"] = parent.get("deletes", [])
+    return manifest
+
+
+def _write_data(
+    df: DataFrame, path: str, version: int, partition_by: str | None = None
+) -> Path:
+    """Write a commit's rows into a fresh ``data/v{version}-<uuid8>``
+    directory — invisible until a manifest references its files."""
+    data_dir = Path(path) / "data" / f"v{version}-{uuid.uuid4().hex[:8]}"
+    writer = df.write.mode("error")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(str(data_dir))
+    return data_dir
+
+
+def _rel_files(path: str, data_dir: Path) -> list[str]:
+    """The parquet files under ``data_dir``, table-relative and sorted."""
+    root = Path(path)
+    return sorted(
+        str(p.relative_to(root)) for p in data_dir.rglob("*.parquet") if p.is_file()
+    )
+
+
+def _may_match(stats: dict, rel: str, col: str, lo, hi) -> bool:
+    """Can file ``rel`` hold a row with ``lo <= col <= hi``?  A file
+    without recorded stats for ``col`` always can: pruning never drops
+    data."""
+    rng = stats.get(rel, {}).get(col)
+    return rng is None or (rng[0] <= hi and rng[1] >= lo)
+
+
+def _commit(
+    df: DataFrame,
+    path: str,
+    mode: str,
+    tag: str | None = None,
+    op: str | None = None,
+    stats_cols: list[str] | None = None,
+) -> int:
+    """Write ``df`` and publish it as the next version (the body of
+    snapshot_commit, snapshot_commit_stats and snapshot_compact)."""
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"unknown snapshot mode {mode!r}")
+    v = _latest(path) + 1
+    manifest = _next_manifest(path, v, mode, _rel_files(path, _write_data(df, path, v)))
+    if op is not None:
+        manifest["op"] = op
+    if tag is not None:
+        manifest["tag"] = tag
+    if stats_cols is not None:
+        stats = manifest.get("stats", {})
+        manifest["stats"] = {
+            rel: stats[rel] if rel in stats else _file_stats(Path(path), rel, stats_cols)
+            for rel in manifest["files"]
+        }
+    return _publish(path, manifest)
+
+
 def snapshot_commit(
     df: DataFrame, path: str, mode: str = "append", tag: str | None = None
 ) -> int:
@@ -124,60 +273,15 @@ def snapshot_commit(
     files remain on disk for time travel until vacuumed).
 
     ``tag`` (r6) records an idempotency token IN the manifest — commit
-    and token become visible in the same atomic rename, which is what
-    lets a streaming writer make "commit micro-batch N exactly once"
-    crash-safe: on replay, :func:`snapshot_version_by_tag` finds the
-    already-committed version instead of appending the batch twice."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"unknown snapshot mode {mode!r}")
-    root = Path(path)
-    versions = snapshot_versions(path)
-    new_version = (versions[-1] + 1) if versions else 1
-    # data files land in a commit-unique subdir first — invisible until
-    # the manifest rename below
-    commit_id = f"v{new_version}-{uuid.uuid4().hex[:8]}"
-    data_dir = root / "data" / commit_id
-    df.write.mode("error").parquet(str(data_dir))
-    new_files = sorted(
-        str(p.relative_to(root))
-        for p in data_dir.rglob("*.parquet")
-        if p.is_file()
-    )
-    files = new_files
-    inherited_stats: dict = {}
-    inherited_dvs: list[str] = []
-    if mode == "append" and versions:
-        parent = _read_manifest(path, versions[-1])
-        files = parent["files"] + new_files
-        # column statistics recorded by snapshot_commit_stats stay valid
-        # for inherited (immutable) files — carry them forward so a
-        # stats-less append never blinds the scan pruner retroactively
-        inherited_stats = {
-            f: s for f, s in parent.get("stats", {}).items() if f in set(files)
-        }
-        # deletion vectors mask rows of inherited files; dropping them on
-        # a routine append would RESURRECT deleted rows (ADVICE r10) —
-        # carry them forward.  Overwrite references none of the parent's
-        # files, so its vectors have nothing left to mask and are dropped.
-        inherited_dvs = list(parent.get("deletes", []))
-    mdir = _manifest_dir(path)
-    mdir.mkdir(parents=True, exist_ok=True)
-    manifest = {
-        "version": new_version,
-        "parent": versions[-1] if versions else None,
-        "op": mode,
-        "files": files,
-    }
-    if tag is not None:
-        manifest["tag"] = tag
-    if inherited_stats:
-        manifest["stats"] = inherited_stats
-    if inherited_dvs:
-        manifest["deletes"] = inherited_dvs
-    tmp = mdir / f"v{new_version}.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=1))
-    os.rename(tmp, mdir / f"v{new_version}.json")  # THE commit point
-    return new_version
+    and token become visible in the same put-if-absent publish, which is
+    what lets a streaming writer make "commit micro-batch N exactly
+    once" crash-safe: on replay, :func:`snapshot_version_by_tag` finds
+    the already-committed version instead of appending the batch twice.
+
+    Raises :class:`CommitConflict` if another writer published the same
+    version first; this commit's data files are then vacuumable
+    orphans."""
+    return _commit(df, path, mode, tag=tag)
 
 
 def snapshot_commit_generations(
@@ -194,7 +298,7 @@ def snapshot_commit_generations(
     batch postings come off one assignment pass, so writing them
     separately re-ran the write machinery twice for rows already
     sitting in the same frame.  Returns the committed version numbers
-    in order; the LAST manifest rename is the visibility point for the
+    in order; the LAST manifest publish is the visibility point for the
     final version (each earlier version becomes visible exactly when
     its own manifest lands, preserving per-version atomicity).
 
@@ -203,52 +307,12 @@ def snapshot_commit_generations(
     manifest (duplicate rows on read)."""
     if len(set(gens)) != len(gens):
         raise ValueError(f"duplicate generations in {gens!r}")
-    root = Path(path)
-    versions = snapshot_versions(path)
-    first_version = (versions[-1] + 1) if versions else 1
-    commit_id = f"v{first_version}-{uuid.uuid4().hex[:8]}"
-    data_dir = root / "data" / commit_id
-    df.write.mode("error").partitionBy(gen_col).parquet(str(data_dir))
-
-    inherited: list[str] = []
-    inherited_stats: dict = {}
-    inherited_dvs: list[str] = []
-    if versions:
-        parent = _read_manifest(path, versions[-1])
-        inherited = parent["files"]
-        inherited_stats = parent.get("stats", {})
-        inherited_dvs = list(parent.get("deletes", []))
-
-    mdir = _manifest_dir(path)
-    mdir.mkdir(parents=True, exist_ok=True)
+    first = _latest(path) + 1
+    data_dir = _write_data(df, path, first, partition_by=gen_col)
     out: list[int] = []
-    files = list(inherited)
-    parent_v = versions[-1] if versions else None
     for i, g in enumerate(gens):
-        gdir = data_dir / f"{gen_col}={g}"
-        files = files + sorted(
-            str(p.relative_to(root))
-            for p in gdir.rglob("*.parquet")
-            if p.is_file()
-        )
-        v = first_version + i
-        manifest = {
-            "version": v,
-            "parent": parent_v,
-            "op": "append",
-            "files": files,
-        }
-        if inherited_stats:
-            manifest["stats"] = {
-                f: s for f, s in inherited_stats.items() if f in set(files)
-            }
-        if inherited_dvs:
-            manifest["deletes"] = inherited_dvs
-        tmp = mdir / f"v{v}.json.tmp"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.rename(tmp, mdir / f"v{v}.json")  # per-version commit point
-        parent_v = v
-        out.append(v)
+        new_files = _rel_files(path, data_dir / f"{gen_col}={g}")
+        out.append(_publish(path, _next_manifest(path, first + i, "append", new_files)))
     return out
 
 
@@ -276,13 +340,7 @@ def snapshot_read(
     with NULLs for columns a file predates — immutable files are never
     rewritten for a column add, which at 100 TB is the difference
     between a metadata operation and a full-table rewrite."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions}")
-    m = _read_manifest(path, v)
+    _, m = _resolve(path, version)
     files = m["files"]
     if not files:
         return spark.createDataFrame([], schema="dummy string").limit(0)
@@ -366,8 +424,8 @@ def snapshot_diff(
     reading shared files too (ADVICE r10)."""
     from pyspark.sql import functions as F
 
-    m_from = _read_manifest(path, v_from)
-    m_to = _read_manifest(path, v_to)
+    _, m_from = _resolve(path, v_from)
+    _, m_to = _resolve(path, v_to)
     if m_from.get("deletes") or m_to.get("deletes"):
         a = snapshot_read(spark, path, v_from)
         b = snapshot_read(spark, path, v_to)
@@ -437,27 +495,7 @@ def snapshot_commit_stats(
     prune files BEFORE any read).  Stats come from the parquet footers
     of the just-written files; appended manifests inherit the parent's
     stats for retained files."""
-    root = Path(path)
-    parent_versions = snapshot_versions(path)
-    parent_stats = (
-        _read_manifest(path, parent_versions[-1]).get("stats", {})
-        if parent_versions
-        else {}
-    )
-    v = snapshot_commit(df, path, mode=mode)
-    m = _read_manifest(path, v)
-    stats = {}
-    for rel in m["files"]:
-        if rel in parent_stats:
-            stats[rel] = parent_stats[rel]
-        else:
-            stats[rel] = _file_stats(root, rel, stats_cols)
-    m["stats"] = stats
-    mdir = _manifest_dir(path)
-    tmp = mdir / f"v{v}.json.tmp"
-    tmp.write_text(json.dumps(m, indent=1))
-    os.rename(tmp, mdir / f"v{v}.json")
-    return v
+    return _commit(df, path, mode, stats_cols=stats_cols)
 
 
 def snapshot_scan(
@@ -478,16 +516,11 @@ def snapshot_scan(
     paying: a filter on a clustered column touches the few files whose
     range matches, decided from one small JSON instead of an
     object-store LIST + footer fetch per file."""
-    versions = snapshot_versions(path)
-    v = versions[-1] if version is None else version
-    m = _read_manifest(path, v)
-    stats = m.get("stats", {})
-    keep = []
-    for rel in m["files"]:
-        rng = stats.get(rel, {}).get(col)
-        if rng is None or (rng[0] <= hi and rng[1] >= lo):
-            keep.append(rel)
     from pyspark.sql import functions as F
+
+    _, m = _resolve(path, version)
+    stats = m.get("stats", {})
+    keep = [rel for rel in m["files"] if _may_match(stats, rel, col, lo, hi)]
 
     # everything pruned: schema-only empty frame from the full file list
     src = keep if keep else m["files"]
@@ -526,14 +559,7 @@ def snapshot_compact(
         cur = cur.distinct()
     if target_files is not None:
         cur = cur.coalesce(target_files)
-    v = snapshot_commit(cur, path, mode="overwrite")
-    m = _read_manifest(path, v)
-    m["op"] = "compact"
-    mdir = _manifest_dir(path)
-    tmp = mdir / f"v{v}.json.tmp"
-    tmp.write_text(json.dumps(m, indent=1))
-    os.rename(tmp, mdir / f"v{v}.json")
-    return v
+    return _commit(cur, path, "overwrite", op="compact")
 
 
 def snapshot_delete(
@@ -556,24 +582,14 @@ def snapshot_delete(
     from pyspark.sql import functions as F
 
     root = Path(path)
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no snapshot versions at {path!r}")
-    m = _read_manifest(path, versions[-1])
+    v, m = _head(path)
     stats = m.get("stats", {})
     dvs = m.get("deletes", [])
     touched, untouched = [], []
     for rel in m["files"]:
-        rng = stats.get(rel, {}).get(col)
-        if rng is None or (rng[0] <= hi and rng[1] >= lo):
-            touched.append(rel)
-        else:
-            untouched.append(rel)
-    new_version = versions[-1] + 1
+        (touched if _may_match(stats, rel, col, lo, hi) else untouched).append(rel)
     new_files: list[str] = []
     if touched:
-        commit_id = f"v{new_version}-{uuid.uuid4().hex[:8]}"
-        data_dir = root / "data" / commit_id
         # NULL keys can never match a BETWEEN predicate, but the naive
         # ~(col >= lo AND col <= hi) evaluates to NULL for them and a
         # filter drops NULL — which would silently delete NULL-key rows
@@ -588,32 +604,19 @@ def snapshot_delete(
         kept = src_df.filter(
             F.col(col).isNull() | ~((F.col(col) >= lo) & (F.col(col) <= hi))
         )
-        kept.write.mode("error").parquet(str(data_dir))
-        new_files = sorted(
-            str(p.relative_to(root))
-            for p in data_dir.rglob("*.parquet")
-            if p.is_file()
-        )
-    files = untouched + new_files
-    manifest = {
-        "version": new_version,
-        "parent": versions[-1],
+        new_files = _rel_files(path, _write_data(kept, path, v + 1))
+    _publish(path, {
+        "version": v + 1,
+        "parent": v,
         "op": "delete",
-        "files": files,
-    }
-    inherited = {f: s for f, s in stats.items() if f in set(untouched)}
-    if inherited:
-        manifest["stats"] = inherited
-    if dvs and untouched:
+        "files": untouched + new_files,
+        "stats": stats,
         # untouched files still need their masks; rewritten files were
         # read THROUGH the vectors above, so their stale entries match
         # no manifest file and are inert
-        manifest["deletes"] = list(dvs)
-    mdir = _manifest_dir(path)
-    tmp = mdir / f"v{new_version}.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=1))
-    os.rename(tmp, mdir / f"v{new_version}.json")
-    return new_version, len(touched), len(m["files"])
+        "deletes": dvs if untouched else [],
+    })
+    return v + 1, len(touched), len(m["files"])
 
 
 def snapshot_delete_dv(
@@ -642,17 +645,9 @@ def snapshot_delete_dv(
     from pyspark.sql import functions as F
 
     root = Path(path)
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no snapshot versions at {path!r}")
-    m = _read_manifest(path, versions[-1])
+    v, m = _head(path)
     stats = m.get("stats", {})
-    candidates = []
-    for rel in m["files"]:
-        rng = stats.get(rel, {}).get(col)
-        if rng is None or (rng[0] <= hi and rng[1] >= lo):
-            candidates.append(rel)
-    new_version = versions[-1] + 1
+    candidates = [rel for rel in m["files"] if _may_match(stats, rel, col, lo, hi)]
     deletes = list(m.get("deletes", []))
     n_deleted = 0
     if candidates:
@@ -672,24 +667,18 @@ def snapshot_delete_dv(
         matched = matched.localCheckpoint(eager=True)
         n_deleted = matched.count()
         if n_deleted:
-            dv_rel = f"deletes/v{new_version}-{uuid.uuid4().hex[:8]}"
+            dv_rel = f"deletes/v{v + 1}-{uuid.uuid4().hex[:8]}"
             matched.write.mode("error").parquet(str(root / dv_rel))
             deletes.append(dv_rel)
-    manifest = {
-        "version": new_version,
-        "parent": versions[-1],
+    _publish(path, {
+        "version": v + 1,
+        "parent": v,
         "op": "delete-dv",
         "files": list(m["files"]),
-    }
-    if deletes:
-        manifest["deletes"] = deletes
-    if stats:
-        manifest["stats"] = stats
-    mdir = _manifest_dir(path)
-    tmp = mdir / f"v{new_version}.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=1))
-    os.rename(tmp, mdir / f"v{new_version}.json")
-    return new_version, n_deleted
+        "deletes": deletes,
+        "stats": stats,
+    })
+    return v + 1, n_deleted
 
 
 def snapshot_purge_dv(spark: SparkSession, path: str) -> tuple[int, int, int]:
@@ -708,26 +697,17 @@ def snapshot_purge_dv(spark: SparkSession, path: str) -> tuple[int, int, int]:
     from pyspark.sql import functions as F
 
     root = Path(path)
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no snapshot versions at {path!r}")
-    m = _read_manifest(path, versions[-1])
+    v, m = _head(path)
     dvs = m.get("deletes", [])
-    new_version = versions[-1] + 1
+    manifest = {
+        "version": v + 1,
+        "parent": v,
+        "op": "purge-dv",
+        "files": list(m["files"]),
+        "stats": m.get("stats", {}),
+    }
     if not dvs:
-        manifest = {
-            "version": new_version,
-            "parent": versions[-1],
-            "op": "purge-dv",
-            "files": list(m["files"]),
-        }
-        if m.get("stats"):
-            manifest["stats"] = m["stats"]
-        mdir = _manifest_dir(path)
-        tmp = mdir / f"v{new_version}.json.tmp"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.rename(tmp, mdir / f"v{new_version}.json")
-        return new_version, 0, 0
+        return _publish(path, manifest), 0, 0
     dv = spark.read.parquet(*[str(root / d) for d in dvs])
     # stale DV entries (files a CoW verb has since rewritten out of the
     # manifest) mask nothing — count and rewrite only live-file entries
@@ -742,35 +722,15 @@ def snapshot_purge_dv(spark: SparkSession, path: str) -> tuple[int, int, int]:
     rewritten = sorted(f for f in m["files"] if f in touched)
     new_files: list[str] = []
     if rewritten:
-        commit_id = f"v{new_version}-{uuid.uuid4().hex[:8]}"
-        data_dir = root / "data" / commit_id
         kept = _subtract_dvs(
             spark,
             path,
             spark.read.parquet(*[str(root / f) for f in rewritten]),
             dvs,
         )
-        kept.write.mode("error").parquet(str(data_dir))
-        new_files = sorted(
-            str(p.relative_to(root))
-            for p in data_dir.rglob("*.parquet")
-            if p.is_file()
-        )
-    stats = m.get("stats", {})
-    inherited = {f: s for f, s in stats.items() if f in set(untouched)}
-    manifest = {
-        "version": new_version,
-        "parent": versions[-1],
-        "op": "purge-dv",
-        "files": untouched + new_files,
-    }
-    if inherited:
-        manifest["stats"] = inherited
-    mdir = _manifest_dir(path)
-    tmp = mdir / f"v{new_version}.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=1))
-    os.rename(tmp, mdir / f"v{new_version}.json")
-    return new_version, len(rewritten), n_purged
+        new_files = _rel_files(path, _write_data(kept, path, v + 1))
+    manifest["files"] = untouched + new_files
+    return _publish(path, manifest), len(rewritten), n_purged
 
 
 def snapshot_restore(path: str, version: int) -> int:
@@ -787,25 +747,17 @@ def snapshot_restore(path: str, version: int) -> int:
     if version not in versions:
         raise ValueError(f"version {version} not in {versions}")
     m = _read_manifest(path, version)
-    new_version = versions[-1] + 1
-    manifest = {
-        "version": new_version,
+    return _publish(path, {
+        "version": versions[-1] + 1,
         "parent": versions[-1],
         "op": "restore",
         "restored_from": version,
         "files": list(m["files"]),
-    }
-    if m.get("stats"):
-        manifest["stats"] = m["stats"]
-    if m.get("deletes"):
+        "stats": m.get("stats", {}),
         # the restored state includes its deletion-vector masks — a
         # restore without them would resurrect deleted rows (ADVICE r10)
-        manifest["deletes"] = list(m["deletes"])
-    mdir = _manifest_dir(path)
-    tmp = mdir / f"v{new_version}.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=1))
-    os.rename(tmp, mdir / f"v{new_version}.json")
-    return new_version
+        "deletes": m.get("deletes", []),
+    })
 
 
 def snapshot_clone(src: str, dst: str) -> int:
@@ -831,24 +783,16 @@ def snapshot_clone(src: str, dst: str) -> int:
     if snapshot_versions(dst):
         raise ValueError(f"destination {dst!r} already has versions")
     src_root = Path(src).resolve()
-    versions = snapshot_versions(src)
-    if not versions:
-        raise ValueError(f"no snapshot versions at {src!r}")
-    m = _read_manifest(src, versions[-1])
-    abs_files = [str(src_root / f) for f in m["files"]]
+    src_version, m = _head(src)
     manifest = {
         "version": 1,
         "parent": 0,
         "op": "clone",
         "source": str(src_root),
-        "source_version": versions[-1],
-        "files": abs_files,
+        "source_version": src_version,
+        "files": [str(src_root / f) for f in m["files"]],
+        "stats": {str(src_root / f): s for f, s in m.get("stats", {}).items()},
     }
-    stats = m.get("stats", {})
-    if stats:
-        manifest["stats"] = {
-            str(src_root / f): s for f, s in stats.items() if f in set(m["files"])
-        }
     src_dvs = m.get("deletes", [])
     if src_dvs:
         # the source's deletion vectors store SOURCE-relative file paths;
@@ -882,12 +826,7 @@ def snapshot_clone(src: str, dst: str) -> int:
             pq.write_table(t, str(dst_root / rel / "part-00000.parquet"))
             deletes_rel.append(rel)
         manifest["deletes"] = deletes_rel
-    mdir = _manifest_dir(dst)
-    mdir.mkdir(parents=True, exist_ok=True)
-    tmp = mdir / "v1.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=1))
-    os.rename(tmp, mdir / "v1.json")
-    return 1
+    return _publish(dst, manifest)
 
 
 def snapshot_update(
@@ -918,25 +857,15 @@ def snapshot_update(
     from pyspark.sql import functions as F
 
     root = Path(path)
-    versions = snapshot_versions(path)
-    if not versions:
-        raise ValueError(f"no snapshot versions at {path!r}")
-    m = _read_manifest(path, versions[-1])
+    v, m = _head(path)
     stats = m.get("stats", {})
     dvs = m.get("deletes", [])
     touched, untouched = [], []
     for rel in m["files"]:
-        rng = stats.get(rel, {}).get(col)
-        if rng is None or (rng[0] <= hi and rng[1] >= lo):
-            touched.append(rel)
-        else:
-            untouched.append(rel)
-    new_version = versions[-1] + 1
+        (touched if _may_match(stats, rel, col, lo, hi) else untouched).append(rel)
     new_files: list[str] = []
     new_stats: dict[str, dict] = {}
     if touched:
-        commit_id = f"v{new_version}-{uuid.uuid4().hex[:8]}"
-        data_dir = root / "data" / commit_id
         df = spark.read.parquet(*[str(root / f) for f in touched])
         if dvs:
             # DV-masked rows must not reappear in the rewritten files
@@ -956,33 +885,19 @@ def snapshot_update(
                 for c in df.columns
             ]
         )
-        updated.write.mode("error").parquet(str(data_dir))
-        new_files = sorted(
-            str(p.relative_to(root))
-            for p in data_dir.rglob("*.parquet")
-            if p.is_file()
-        )
+        new_files = _rel_files(path, _write_data(updated, path, v + 1))
         stat_cols = sorted({c for rel in touched for c in stats.get(rel, {})})
         for rel in new_files:
             if stat_cols:
                 new_stats[rel] = _file_stats(root, rel, stat_cols)
-    files = untouched + new_files
-    manifest = {
-        "version": new_version,
-        "parent": versions[-1],
+    _publish(path, {
+        "version": v + 1,
+        "parent": v,
         "op": "update",
-        "files": files,
-    }
-    inherited = {f: s for f, s in stats.items() if f in set(untouched)}
-    inherited.update(new_stats)
-    if inherited:
-        manifest["stats"] = inherited
-    if dvs and untouched:
+        "files": untouched + new_files,
+        "stats": {**stats, **new_stats},
         # same carry rule as snapshot_delete: untouched files keep their
         # masks; rewritten files were read through the vectors above
-        manifest["deletes"] = list(dvs)
-    mdir = _manifest_dir(path)
-    tmp = mdir / f"v{new_version}.json.tmp"
-    tmp.write_text(json.dumps(manifest, indent=1))
-    os.rename(tmp, mdir / f"v{new_version}.json")
-    return new_version, len(touched), len(m["files"])
+        "deletes": dvs if untouched else [],
+    })
+    return v + 1, len(touched), len(m["files"])

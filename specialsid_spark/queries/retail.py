@@ -556,7 +556,7 @@ def clean_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions out of order changes the per-version sums.
 
     Scale shape: commits are normal parquet writes plus one manifest
-    rename (O(1) metadata); reads list the manifest's files instead of
+    publish (O(1) metadata); reads list the manifest's files instead of
     the directory — at 100 TB that is the difference between an
     object-store LIST storm and one small JSON read.  Per-version
     aggregates are a LAZY unionByName over the manifest-pinned reads
@@ -1256,7 +1256,7 @@ def clean_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
     just its shape; time-traveling to v1 still yields the old schema.
 
     Scale shape: identical to the other snapshot queries — commits are
-    parquet writes + one O(1) manifest rename; per-version aggregates
+    parquet writes + one O(1) manifest publish; per-version aggregates
     are lazy unions over manifest-pinned reads."""
     from pathlib import Path
 

@@ -705,8 +705,8 @@ def streaming_snapshot_ivm(
     atomically with its data:
 
     * the TABLE commit: ``snapshot_commit(tag=batch-N)`` records the
-      batch id inside the manifest (one atomic rename covers both), so
-      a crash-replayed batch finds its version via
+      batch id inside the manifest (one put-if-absent publish covers
+      both), so a crash-replayed batch finds its version via
       ``snapshot_version_by_tag`` instead of appending twice;
     * the SUMMARY merge: :func:`crash_safe_summary_merge`'s _BATCH_ID
       sidecar + generation swap, unchanged.
@@ -1415,7 +1415,7 @@ def hop4_incremental_lsh_gate(
     (2) intra-dedups the micro-batch with the greedy keep-lowest-id
     rule, and (3) appends the admitted docs' bands AND their doc ids as
     ONE tagged snapshot commit — commit and idempotency token become
-    visible in the same atomic manifest rename, so a replayed
+    visible in the same put-if-absent manifest publish, so a replayed
     micro-batch is a no-op (snapshot_version_by_tag short-circuit).
 
     vs. streaming_neardup_ingest: same gate semantics, different state
@@ -1567,8 +1567,9 @@ def hop4_incremental_simhash_gate(
     itself with the greedy keep-lowest-id rule at the same radius, and
     (3) appends the admitted docs' probe rows AND their doc ids as ONE
     tagged snapshot commit — commit and idempotency token become
-    visible in the same atomic manifest rename, so a crash-replayed
-    micro-batch is a no-op (snapshot_version_by_tag short-circuit).
+    visible in the same put-if-absent manifest publish, so a
+    crash-replayed micro-batch is a no-op (snapshot_version_by_tag
+    short-circuit).
 
     At 100 TB: per batch the shuffle is the batch's block keys only
     (4 rows x 4 longs per doc); the index table is append-only,

@@ -3,6 +3,7 @@ planning, planning-time filter pruning, never-drop conservatism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql.datasource import (
     EqualTo,
     GreaterThan,
@@ -12,8 +13,13 @@ from pyspark.sql.datasource import (
 )
 
 from specialsid_spark.operators.snapshot import (
+    _read_manifest,
     snapshot_commit,
     snapshot_commit_stats,
+    snapshot_delete_dv,
+    snapshot_purge_dv,
+    snapshot_read,
+    snapshot_versions,
 )
 from specialsid_spark.sources.pyds import SnapshotReader, register_snapshot_source
 
@@ -224,3 +230,53 @@ def test_query_green_on_default_conf_session(spark, tmp_path):
         assert spark.conf.get(conf) == "true"
     finally:
         spark.conf.set(conf, prior)
+
+
+def _dv_table(spark, tmp_path):
+    """100 rows, then a deletion-vector delete of 10 of them."""
+    t = str(tmp_path / "tbl")
+    snapshot_commit(spark.range(0, 100).selectExpr("id", "id * 10 AS v"), t)
+    assert snapshot_delete_dv(spark, t, "id", 0, 9) == (2, 10)
+    assert snapshot_read(spark, t).count() == 90
+    return t
+
+
+def _load(spark, t):
+    return (
+        spark.read.format("specialsid_snapshot")
+        .schema("id long, v long")
+        .option("path", t)
+        .load()
+    )
+
+
+def test_reader_refuses_deletion_vectors(spark, tmp_path):
+    """read() streams raw parquet and cannot mask row positions, so a
+    table with deletion vectors is refused at planning time instead of
+    resurrecting the deleted rows; once purged it reads normally."""
+    t = _dv_table(spark, tmp_path)
+    register_snapshot_source(spark)
+    with pytest.raises(ValueError, match="snapshot_read.*snapshot_purge_dv"):
+        SnapshotReader(t)
+    with pytest.raises(Exception, match="snapshot_purge_dv"):
+        _load(spark, t).count()
+    snapshot_purge_dv(spark, t)
+    assert _load(spark, t).count() == 90
+
+
+def test_arrow_writer_append_keeps_deletion_vectors(spark, tmp_path):
+    """A pyds append inherits the parent's deletion vectors like
+    snapshot_commit does; dropping them would bring deleted rows back."""
+    t = _dv_table(spark, tmp_path)
+    register_snapshot_source(spark)
+    (
+        spark.range(100, 110)
+        .selectExpr("id", "id*10 AS v")
+        .write.format("specialsid_snapshot")
+        .option("path", t)
+        .mode("append")
+        .save()
+    )
+    assert snapshot_versions(t) == [1, 2, 3]
+    assert snapshot_read(spark, t).count() == 100
+    assert _read_manifest(t, 3)["deletes"] == _read_manifest(t, 2)["deletes"]

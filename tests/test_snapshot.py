@@ -861,3 +861,118 @@ def test_commit_generations_rejects_duplicate_gens(spark, tmp_path):
         )
     assert snapshot_versions(t) == []
     assert not Path(t).exists()
+
+
+def test_publish_is_put_if_absent(tmp_path):
+    """The one commit point never replaces a published version: a
+    second publish of vN raises CommitConflict, vN keeps the first
+    manifest, and no temp file is left in ``_manifests/``."""
+    from specialsid_spark.operators.snapshot import CommitConflict, _publish
+
+    t = str(tmp_path / "tbl")
+    first = {"version": 1, "parent": None, "op": "append", "files": ["a.parquet"]}
+    assert _publish(t, first) == 1
+    with pytest.raises(CommitConflict, match="version 1"):
+        _publish(t, {**first, "files": ["b.parquet"]})
+    mdir = Path(t) / "_manifests"
+    assert json.loads((mdir / "v1.json").read_text()) == first
+    assert [p.name for p in mdir.iterdir()] == ["v1.json"]
+    assert issubclass(CommitConflict, FileExistsError)
+
+
+def test_publish_drops_unlisted_stats_and_empty_deletes(tmp_path):
+    from specialsid_spark.operators.snapshot import _publish, _read_manifest
+
+    t = str(tmp_path / "tbl")
+    _publish(t, {
+        "version": 1,
+        "parent": None,
+        "op": "delete",
+        "files": ["a.parquet"],
+        "stats": {"a.parquet": {"id": [0, 9]}, "gone.parquet": {"id": [5, 7]}},
+        "deletes": [],
+    })
+    m = _read_manifest(t, 1)
+    assert m["stats"] == {"a.parquet": {"id": [0, 9]}}
+    assert "deletes" not in m
+
+
+def test_racing_appends_lose_no_commit(spark, tmp_path, monkeypatch):
+    """Two writers append to one table after a v1 bootstrap, and both
+    finish writing data before either publishes, so both built their
+    manifest on v1.  Exactly one wins v2; the other raises
+    CommitConflict instead of silently replacing it.  Every row the
+    winner committed is visible, and the loser's data files are
+    vacuumable orphans."""
+    import threading
+
+    from specialsid_spark.operators import snapshot
+    from specialsid_spark.operators.snapshot import CommitConflict
+
+    t = str(tmp_path / "tbl")
+    assert snapshot_commit(_df(spark, 0, 10), t) == 1
+    both_written = threading.Barrier(2, timeout=120)
+    write_data = snapshot._write_data
+
+    def write_then_wait(*args, **kwargs):
+        out = write_data(*args, **kwargs)
+        both_written.wait()
+        return out
+
+    monkeypatch.setattr(snapshot, "_write_data", write_then_wait)
+    results: dict[int, object] = {}
+
+    def append(i):
+        try:
+            results[i] = snapshot_commit(_df(spark, 10 * i, 10 * i + 10), t)
+        except Exception as exc:  # noqa: BLE001 — the assertion inspects it
+            results[i] = exc
+
+    threads = [threading.Thread(target=append, args=(i,)) for i in (1, 2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    won = {i: r for i, r in results.items() if isinstance(r, int)}
+    lost = {i: r for i, r in results.items() if not isinstance(r, int)}
+    assert list(won.values()) == [2], results
+    assert len(lost) == 1 and isinstance(next(iter(lost.values())), CommitConflict)
+    assert snapshot_versions(t) == [1, 2]
+    (w,) = won
+    expected = list(range(10)) + list(range(10 * w, 10 * w + 10))
+    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == expected
+    removed = snapshot_vacuum(t, keep_last=2)
+    assert removed and all(r.startswith("data/v2-") for r in removed)
+    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == expected
+
+
+@pytest.mark.parametrize("verb", ["read", "scan", "diff"])
+def test_read_verbs_share_one_version_resolver(spark, tmp_path, verb):
+    """Every read verb reports an empty table as FileNotFoundError and
+    an unknown version as ValueError."""
+    from specialsid_spark.operators.snapshot import snapshot_diff, snapshot_scan
+
+    t = str(tmp_path / "tbl")
+    call = {
+        "read": lambda v: snapshot_read(spark, t, v),
+        "scan": lambda v: snapshot_scan(spark, t, "id", 0, 5, version=v)[0],
+        "diff": lambda v: snapshot_diff(spark, t, v, v),
+    }[verb]
+    with pytest.raises(FileNotFoundError, match="no committed snapshot"):
+        call(1)
+    snapshot_commit(_df(spark, 0, 10), t)
+    with pytest.raises(ValueError, match=r"version 7 not in \[1\]"):
+        call(7)
+    assert call(1).count() == {"read": 10, "scan": 6, "diff": 0}[verb]
+
+
+def test_manifest_format_has_one_owner():
+    """Only operators/snapshot.py knows where manifests live; every
+    other module goes through its readers and its one publish."""
+    from specialsid_spark.operators import snapshot
+
+    pkg = Path(snapshot.__file__).parents[1]
+    owners = sorted(
+        str(p.relative_to(pkg)) for p in pkg.rglob("*.py") if "_manifests" in p.read_text()
+    )
+    assert owners == ["operators/snapshot.py"]
